@@ -2,7 +2,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark entry point: times every registered query on
   * SPARK_GRAFT_SF_DIR and emits ONE machine-parseable JSON line.
@@ -20,25 +20,14 @@ object Bench {
     // machine) — a silent local[4] fallback understates every
     // parallelism-hungry query by 2-3x and poisons the min accumulator
     // with slow-but-valid entries; SPARK_GRAFT_CPUS still wins
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // object top-k / collect aggregates routinely exceed the default
-      // 128-group hash threshold per task (the serve graph's per-node
-      // top-k alone has thousands of groups); the sort-based fallback
-      // re-sorts every input row — the exact cost the bounded aggregate
-      // exists to avoid. Group-count is bounded by nodes/task with
-      // KB-scale buffers, so the hash path is safe at any corpus size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JIT + codegen + session init land here, not on
     // whichever query happens to run first.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
     // Contention canary: a fixed-cost scan+shuffle+sort timed before
     // and after the query loop. Its workload never changes, so any
     // drift between runs (or vs the idle-box reference in SCALE.md)
@@ -119,7 +108,6 @@ object Bench {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.util.control.NonFatal
       val fs = warmSubsystems.collect { case (name, true, build) =>
         Future {
           val t0 = System.nanoTime()
@@ -148,7 +136,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable => errors += s"$name: ${e.getClass.getSimpleName}"; false }
+          catch { case NonFatal(e) => errors += s"$name: ${e.getClass.getSimpleName}"; false }
         val dt = (System.nanoTime() - t0) / 1e9
         // isolate runs: drop persisted blocks a query left behind so the
         // next one isn't taxed by eviction/GC of foreign cache. Catalog
@@ -194,7 +182,7 @@ object Bench {
           new String(Files.readAllBytes(Paths.get(".git/" + head.drop(5))),
             StandardCharsets.UTF_8).trim.take(12)
         else head.take(12)
-      } catch { case _: Throwable => "nogit" }
+      } catch { case NonFatal(_) => "nogit" }
     val querySetHash = selected.keys.toSeq.sorted.mkString(",").hashCode
     val stateKey = s"$querySetHash:$cpus:$gitHead"
     val prevState: Option[(Int, Map[String, Double])] =
@@ -211,7 +199,7 @@ object Bench {
             m.group(1) -> m.group(2).toDouble }
           .toMap
         if (okKey) passes.map(p => (p, mins)) else None
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val passes = prevState.map(_._1 + 1).getOrElse(1)
     val merged = results.map { case (name, t) =>
       val best =
@@ -229,7 +217,7 @@ object Bench {
       Files.write(sp,
         s"""{"state_key":"$stateKey","passes":$passes,"queries":$minQs}"""
           .getBytes(StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     // Errored queries are NOT encoded as -1 inside the timing maps —
     // a consumer summing the map must get the same number as "value";

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool behind PlanQualitySpec's shuffle budgets: prints the
   * hash/range/single-partition exchange count of each named query's
   * executed plan at sf0.01 — the number a new budget entry pins.
@@ -10,9 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object CountShuffles {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.build("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.01"
     for (n <- args) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Plan-audit tool: print the formatted physical plan of named queries
   * (all queries when none named). Usage:
@@ -10,12 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val selected =
       if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted
@@ -23,7 +18,7 @@ object Explain {
     selected.foreach { n =>
       println(s"\n===== $n")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"ERROR: ${e.getMessage}") }
+      catch { case NonFatal(e) => println(s"ERROR: ${e.getMessage}") }
     }
     spark.stop()
   }

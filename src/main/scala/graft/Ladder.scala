@@ -167,7 +167,7 @@ object Ladder {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(8)
     val base = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
     val mid = sys.env.getOrElse("SPARK_GRAFT_MID_DIR", "fixtures/mid")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_LADDER_OUT", "scale_ladder.json")
@@ -194,18 +194,7 @@ object Ladder {
           "scratch path")
     }
     val families = Ladder.families.filter(f => only.forall(_(f.query)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // object top-k / collect aggregates routinely exceed the default
-      // 128-group hash threshold per task (the serve graph's per-node
-      // top-k alone has thousands of groups); the sort-based fallback
-      // re-sorts every input row — the exact cost the bounded aggregate
-      // exists to avoid. Group-count is bounded by nodes/task with
-      // KB-scale buffers, so the hash path is safe at any corpus size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     ensureMid(spark, base, mid)
     // JIT/codegen warm-up only — a warm-up failure must not mask the

@@ -1,7 +1,8 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiling tool: run named queries (bench methodology — .count())
   * and report wall seconds, Spark job count, stage count, task count and
@@ -13,24 +14,14 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // object top-k / collect aggregates routinely exceed the default
-      // 128-group hash threshold per task (the serve graph's per-node
-      // top-k alone has thousands of groups); the sort-based fallback
-      // re-sorts every input row — the exact cost the bounded aggregate
-      // exists to avoid. Group-count is bounded by nodes/task with
-      // KB-scale buffers, so the hash path is safe at any corpus size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" for conf experiments
-    val b = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+    // (runtime SQL confs only — they are set after the session is built)
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.split("=", 2))
-      .foldLeft(b0)((acc, kv) => acc.config(kv(0), kv(1)))
-    val spark = b.getOrCreate()
+      .foreach(kv => spark.conf.set(kv(0), kv(1)))
     spark.sparkContext.setLogLevel("ERROR")
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -47,16 +38,16 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
     // warmup like Bench
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
     // shared warm state like Bench (dedup/streaming/text/serve), so
     // per-query numbers don't carry once-per-corpus builds
-    try queries.Dedup.warmSharedState(spark, sfDir) catch { case _: Throwable => }
-    try queries.StreamingQueries.warmStagingCaches(spark, sfDir) catch { case _: Throwable => }
-    try queries.SimilaritySearch.warmServeGraph(spark, sfDir) catch { case _: Throwable => }
-    try { queries.StreamingQueries.st20BootstrapDir(spark, sfDir); () } catch { case _: Throwable => }
-    try { queries.StreamingQueries.st21BootstrapDir(spark, sfDir); () } catch { case _: Throwable => }
-    try { queries.StreamingQueries.st17BootstrapDir(spark, sfDir); () } catch { case _: Throwable => }
-    try { queries.StreamingQueries.st18BootstrapDir(spark, sfDir); () } catch { case _: Throwable => }
+    try queries.Dedup.warmSharedState(spark, sfDir) catch { case NonFatal(_) => }
+    try queries.StreamingQueries.warmStagingCaches(spark, sfDir) catch { case NonFatal(_) => }
+    try queries.SimilaritySearch.warmServeGraph(spark, sfDir) catch { case NonFatal(_) => }
+    try { queries.StreamingQueries.st20BootstrapDir(spark, sfDir); () } catch { case NonFatal(_) => }
+    try { queries.StreamingQueries.st21BootstrapDir(spark, sfDir); () } catch { case NonFatal(_) => }
+    try { queries.StreamingQueries.st17BootstrapDir(spark, sfDir); () } catch { case NonFatal(_) => }
+    try { queries.StreamingQueries.st18BootstrapDir(spark, sfDir); () } catch { case NonFatal(_) => }
     val selected =
       if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names.toSeq
     for (n <- selected) {
@@ -68,7 +59,7 @@ object Profile {
         Thread.sleep(300) // let listener events drain
         println(f"PROFILE $n%-40s wall=$dt%7.2fs jobs=$jobs%4d stages=$stages%4d tasks=$tasks%6d taskTime=${taskMs / 1000.0}%8.1fs")
       } catch {
-        case e: Throwable => println(s"PROFILE $n ERROR: ${e.getMessage}")
+        case NonFatal(e) => println(s"PROFILE $n ERROR: ${e.getMessage}")
       }
       spark.catalog.clearCache()
       Caching.flush()

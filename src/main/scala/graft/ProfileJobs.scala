@@ -1,7 +1,8 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-job wall time for one query — prints jobId, duration,
   * and the callsite/description so orchestration hot spots are visible.
@@ -11,20 +12,9 @@ object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // object top-k / collect aggregates routinely exceed the default
-      // 128-group hash threshold per task (the serve graph's per-node
-      // top-k alone has thousands of groups); the sort-based fallback
-      // re-sorts every input row — the exact cost the bounded aggregate
-      // exists to avoid. Group-count is bounded by nodes/task with
-      // KB-scale buffers, so the hash path is safe at any corpus size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -42,7 +32,7 @@ object ProfileJobs {
         }
       }
     })
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
     println(s"=== warmup done, running $name (run 1)")
     val t0 = System.nanoTime()
     SparkEntry.queries(name)(spark, sfDir).count()

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev tool: per-component micro-batch time breakdown for streaming
@@ -15,14 +16,9 @@ object ProfileStream {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val sums = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     @volatile var batches = 0
@@ -42,8 +38,8 @@ object ProfileStream {
         }
       }
     })
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    try queries.StreamingQueries.warmStagingCaches(spark, sfDir) catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
+    try queries.StreamingQueries.warmStagingCaches(spark, sfDir) catch { case NonFatal(_) => }
     for (n <- names) {
       sums.clear(); batches = 0; rows = 0L
       val t0 = System.nanoTime()
@@ -56,7 +52,7 @@ object ProfileStream {
         sums.asScala.toSeq.sortBy(-_._2).foreach { case (k, v) =>
           println(f"    $k%-28s ${v / 1000.0}%8.2fs")
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"STREAM $n FAILED: ${e.getClass.getSimpleName}")
       }
       spark.catalog.clearCache(); Caching.flush()

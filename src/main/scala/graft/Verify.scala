@@ -1,29 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // object top-k / collect aggregates routinely exceed the default
-      // 128-group hash threshold per task (the serve graph's per-node
-      // top-k alone has thousands of groups); the sort-based fallback
-      // re-sorts every input row — the exact cost the bounded aggregate
-      // exists to avoid. Group-count is bounded by nodes/task with
-      // KB-scale buffers, so the hash path is safe at any corpus size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Pin the clock so f10_state_timestamp (TIMESTAMP DEFAULT
-      // current_timestamp semantics) is deterministic and its oracle can
-      // embed the same literal. Production runs leave this unset.
-      .config("spark.graft.now", graft.queries.PinnedClock.Now)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    // Pin the clock so f10_state_timestamp (TIMESTAMP DEFAULT
+    // current_timestamp semantics) is deterministic and its oracle can
+    // embed the same literal. Production runs leave this unset; the
+    // value is read at query time, so a runtime set is enough.
+    spark.conf.set("spark.graft.now", graft.queries.PinnedClock.Now)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=q1,q2 dumps just those queries
@@ -56,8 +45,9 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
       finally {
         // release catalog cache AND localCheckpoint blocks between

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic, engine-portable string hashing for text operators
   * (feature hashing F7, MinHash/SimHash dedup, fingerprinting).
   *
@@ -133,23 +131,5 @@ object TextHash {
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Register the four kernels as native expressions (codegen — see
-    * [[TextHashUnary]]; these were Scala UDFs through round 4, paying
-    * the wrapper cost on every shingle of the corpus). Idempotent.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "tok_hash", exprs => TokHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_min", exprs => ShingleMin(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash32", exprs => SimHash32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_set", exprs => ShingleSet(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "h60_f", exprs => Md5H60(exprs.head), "built-in")
   }
 }

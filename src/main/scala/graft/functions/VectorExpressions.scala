@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -518,7 +517,7 @@ case class OccMaxD(child: Expression)
 object VectorExpressions {
   /** Single source of truth for the SRP band family. `graft.queries.Dedup
     * .EmbBands` and `graft.queries.SimilaritySearch.BandPlanes` alias
-    * these, so the SQL registration below, the DataFrame call sites, and
+    * these, so the `srp_buckets` catalog entry, the DataFrame call sites, and
     * the plane-hash oracle SQL can never disagree on the family — the
     * coupling the old per-call-site `require(EmbBands == 8 && ...)`
     * guards enforced by convention is now enforced by definition.
@@ -572,37 +571,4 @@ object VectorExpressions {
   }
   private val warnedPlanes =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-
-  /** Register `dot_f` / `norm_f` / `srp_buckets` as SQL-callable temp
-    * functions on the session. Idempotent; every query entry calls it.
-    * `srp_buckets` is pinned to the ([[SrpBands]], [[SrpPlanes]]) family;
-    * `srp_buckets_p(vec, planes)` takes the plane count as a literal —
-    * the [[adaptiveSrpPlanes]] call sites use it.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "dot_f", exprs => DotProductF(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "norm_f", exprs => NormF(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "srp_buckets", exprs => SrpBucketsF(exprs.head, SrpBands, SrpPlanes),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "srp_buckets_p", exprs => SrpBucketsF(exprs(0), SrpBands,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "dot_d", exprs => DotD(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sqdist_d", exprs => SqDistD(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sub_scale_d", exprs => SubScaleD(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "occ_max_d", exprs => OccMaxD(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "round_f", exprs => RoundFastD(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-  }
 }

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExpressions
-
 /** Persistent IVF ANN index — the similarity-search counterpart of
   * [[DedupIndex]]: quantizer training and corpus assignment happen ONCE
   * at build time and land in parquet state; queries read the state, so
@@ -71,7 +69,6 @@ object AnnIndex {
       stateDir: String,
       quantizer: DataFrame => DataFrame =
         e => SimilaritySearch.kmeansCentsAvg(e)): Unit = {
-    VectorExpressions.register(s)
     quantizer(train)
       .write.mode("overwrite").parquet(s"$stateDir/cent")
     val cents = s.read.parquet(s"$stateDir/cent")
@@ -101,7 +98,6 @@ object AnnIndex {
     * standard IVF staleness trade.
     */
   def append(s: SparkSession, newVecs: DataFrame, stateDir: String): Unit = {
-    VectorExpressions.register(s)
     val cents = s.read.parquet(s"$stateDir/cent")
     assignCells(newVecs, cents, nprobe = 1)
       .write.mode("append").partitionBy("cell").parquet(s"$stateDir/vec")
@@ -123,10 +119,6 @@ object AnnIndex {
     */
   def appendBatch(s: SparkSession, newVecs: DataFrame, stateDir: String,
       tag: String): Unit = {
-    VectorExpressions.register(s)
-    // micro-batch frames carry a CLONED session registry (the st18/st20
-    // UNRESOLVED_ROUTINE lesson) — register there too
-    VectorExpressions.register(newVecs.sparkSession)
     val cents = s.read.parquet(s"$stateDir/cent")
     StateStore.appendTagged(s, assignCells(newVecs, cents, nprobe = 1),
       s"$stateDir/vec", tag, Seq("cell"))
@@ -249,7 +241,6 @@ object AnnIndex {
   def query(s: SparkSession, queries: DataFrame, stateDir: String,
       topK: Int, nprobe: Int,
       candidateFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    VectorExpressions.register(s)
     val cents = s.read.parquet(s"$stateDir/cent")
     val q = assignCells(queries, cents, nprobe)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),

@@ -74,7 +74,6 @@ object Curation {
       s: org.apache.spark.sql.SparkSession, d: String,
       pins: scala.collection.mutable.Buffer[org.apache.spark.sql.DataFrame])
       : org.apache.spark.sql.DataFrame = {
-    TextHash.register(s)
     val q = TextAnalysis.qualityScored(s, d)
       .select(col("doc_id"), col("quality"))
     val n1 = q.agg(count(lit(1)).as("n"))
@@ -142,7 +141,6 @@ FROM shared GROUP BY train_id ORDER BY train_id""")),
     // stratum key; per-stratum windows run partition-parallel.
     Q("curation_stratified_sample",
       (s, d) => {
-        TextHash.register(s)
         val w = Window.partitionBy("lang")
           .orderBy(col("hkey").asc, col("doc_id").asc)
         val wAll = Window.partitionBy("lang")
@@ -244,7 +242,6 @@ FROM p GROUP BY host ORDER BY host""")),
     // consumes a deterministic, disjoint, hash-uniform slice.
     Q("curation_reproducible_shuffle",
       (s, d) => {
-        TextHash.register(s)
         Tables.documents(s, d)
           .withColumn("hkey", expr(hkeyExpr))
           .withColumn("shard", pmod(col("hkey"), lit(Shards.toLong)))
@@ -263,7 +260,6 @@ FROM documents ORDER BY hkey, doc_id""")),
     // per-shard budget.
     Q("curation_token_budget_pack",
       (s, d) => {
-        TextHash.register(s)
         val w = Window.partitionBy("shard")
           .orderBy(col("hkey").asc, col("doc_id").asc)
           .rowsBetween(Window.unboundedPreceding, 0)
@@ -301,7 +297,6 @@ WHERE cum_tokens <= 3000 ORDER BY shard, cum_tokens, doc_id""")),
     // both engines), so readers can seek independently.
     Q("curation_seq_pack",
       (s, d) => {
-        TextHash.register(s)
         val binTokens = 2048L
         val w = Window.partitionBy("shard")
           .orderBy(col("hkey").asc, col("doc_id").asc)
@@ -347,7 +342,6 @@ FROM c ORDER BY shard, bin, off, doc_id""")),
     // adds no new shuffle beyond the stages' own.
     Q("curation_e2e_pipeline",
       (s, d) => {
-        TextHash.register(s)
         import s.implicits._
         val docs = Tables.documents(s, d)
         // 1: quality floor (token count)
@@ -442,7 +436,6 @@ FROM c ORDER BY shard, bin, off, doc_id""")),
     // stage only — composition adds no shuffle beyond the stages' own.
     Q("pipeline_e2e_medallion",
       (s, d) => {
-        TextHash.register(s)
         // 1: medallion silver — the datamart's document population.
         // Unordered facts (the ORDER BY would pay a mid-plan range
         // exchange), and ONE pass: both id roles explode out of the
@@ -524,7 +517,6 @@ FROM c ORDER BY doc_id""")),
     // shuffle on chunk hash; cost ∝ corpus token count, never pairwise.
     Q("curation_paragraph_dedup",
       (s, d) => {
-        TextHash.register(s)
         val docs = Tables.documents(s, d).select("doc_id", "text")
         val corpus = docs.union(docs.filter(col("doc_id") % 10 === 0)
           .select((col("doc_id") + 100000).as("doc_id"), col("text")))
@@ -610,7 +602,6 @@ FROM e ORDER BY doc_id""")),
     // a short source simply contributes everything it has.
     Q("curation_domain_mix",
       (s, d) => {
-        TextHash.register(s)
         import s.implicits._
         val weights = Seq(("src0", 0.4), ("src1", 0.3), ("src2", 0.2),
           ("src3", 0.1)).toDF("source", "wt")
@@ -646,7 +637,6 @@ SELECT doc_id, source, rn FROM r WHERE rn <= ceil(wt * 200) ORDER BY doc_id"""))
     // window every sampler here uses — no global rank anywhere.
     Q("curation_temperature_mix",
       (s, d) => {
-        TextHash.register(s)
         val docs = Tables.documents(s, d)
         val counts = docs.groupBy("source").agg(count(lit(1)).as("n"))
         val tot = counts.agg(sum(sqrt(col("n"))).as("z"))
@@ -947,7 +937,6 @@ ORDER BY sc.doc_id""")),
     // is a per-stratum window.
     Q("curation_train_val_test_split",
       (s, d) => {
-        TextHash.register(s)
         val w = Window.partitionBy("source")
           .orderBy(col("hkey").asc, col("doc_id").asc)
         val wAll = Window.partitionBy("source")
@@ -1167,7 +1156,6 @@ GROUP BY event_type ORDER BY event_type""")),
     // rolling hash, ready to feed the dedup/embedding stages.
     Q("curation_chunk_overlap",
       (s, d) => {
-        TextHash.register(s)
         val C = 50
         val S = 40
         Tables.documents(s, d)

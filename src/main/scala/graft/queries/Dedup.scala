@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{TextHash, VectorExpressions}
+import graft.functions.TextHash
 
 /** Deduplication operators for corpus curation: exact, MinHash+LSH,
   * SimHash, blocked n-gram Jaccard, embedding-cosine near-dup.
@@ -204,7 +204,6 @@ object Dedup {
     * TextHash.shingleSet for why this is a UDF, not a `transform` HOF).
     */
   def docShingles(s: SparkSession, d: String): DataFrame = {
-    TextHash.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         expr("shingle_set(text)").as("shs"))
@@ -256,7 +255,6 @@ object Dedup {
     * blocked-self-join oracle checks.
     */
   def simhashPairs(s: SparkSession, d: String): DataFrame = {
-    TextHash.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), expr("simhash32(text)").as("sh"))
     val banded = docs.select(col("doc_id"), col("source"), col("sh"),
@@ -403,15 +401,7 @@ pairs AS (SELECT a.doc_id AS i, b.doc_id AS j,
     * makes the index persistable and the incremental path
     * delta-proportional ([[DedupIndex]]).
     */
-  def rawPostings(s: SparkSession, docs: DataFrame): DataFrame = {
-    TextHash.register(s)
-    // inside foreachBatch `docs` belongs to the micro-batch's CLONED
-    // session whose function registry was copied at stream start —
-    // register there too, or shingle_set resolves only when some
-    // earlier query happened to register it before the clone was cut
-    // (observed: st20 failing UNRESOLVED_ROUTINE when the warm dirs
-    // were disk-cached and no dedup query had run first)
-    TextHash.register(docs.sparkSession)
+  def rawPostings(docs: DataFrame): DataFrame = {
     docs.select(col("doc_id"), explode(expr("shingle_set(text)")).as("sh"))
       .withColumn("h", expr("tok_hash(sh)")) // hash once, 8 sigs read it
   }
@@ -491,7 +481,7 @@ pairs AS (SELECT a.doc_id AS i, b.doc_id AS j,
     // candidate verification, and the per-doc set sizes all derive from
     // it. Tiny relative to the corpus (one row per distinct shingle
     // occurrence).
-    val raw = rawPostings(s, docs)
+    val raw = rawPostings(docs)
     // materialize, not persist (r14): a persisted plan compiles without
     // AQE, so every downstream stage inherited the static 32-partition
     // shuffles; the checkpointed copy is read partition-coalesced
@@ -1040,7 +1030,6 @@ ORDER BY i, j""")),
     // baseline below bounds what banding can miss.
     Q("dedup_embedding_cosine",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -1097,7 +1086,6 @@ ORDER BY i, j"""
     // for small candidate sets only: O(N²) in the embedding count.
     Q("dedup_embedding_cosine_exact",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))

@@ -157,7 +157,7 @@ object DedupIndex {
     */
   def bootstrap(s: SparkSession, docs: DataFrame, stateDir: String,
       dfCap: Int = Dedup.DfCap): Unit = {
-    Dedup.rawPostings(s, docs)
+    Dedup.rawPostings(docs)
       .write.mode("overwrite").parquet(s"$stateDir/rawpost")
     // downstream stages derive from the durable copy, never re-shingle
     val raw = readRaw(s, Seq(s"$stateDir/rawpost"))
@@ -303,7 +303,7 @@ object DedupIndex {
     // The ONLY text processing of the whole update — and, with sig, the
     // only state WRITES: the new postings/df batches hold the delta
     // alone and join the lineage through meta.
-    Dedup.rawPostings(s, delta)
+    Dedup.rawPostings(delta)
       .write.mode("overwrite").parquet(s"$outDir/rawpost")
     val deltaRaw = readRaw(s, Seq(s"$outDir/rawpost"))
     Dedup.shingleDf(deltaRaw).write.mode("overwrite").parquet(s"$outDir/df")

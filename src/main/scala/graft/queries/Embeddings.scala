@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorExpressions
 
 /** Embedding-column preprocessing for the training-data pipeline:
   * unit-normalization (before cosine ANN the dot product IS the cosine)
@@ -20,7 +19,6 @@ object Embeddings {
   def qs: Seq[Q] = Seq(
     Q("emb_normalize",
       (s, d) => {
-        VectorExpressions.register(s)
         Tables.embeddings(s, d)
           .withColumn("nrm", expr("norm_f(embedding)"))
           .select(col("vec_id"), col("nrm"),
@@ -74,7 +72,6 @@ ORDER BY vec_id, idx""")),
     // identical inputs).
     Q("emb_matryoshka_truncate",
       (s, d) => {
-        VectorExpressions.register(s)
         Tables.embeddings(s, d)
           .withColumn("tr", slice(col("embedding"), 1, 16))
           .withColumn("nrm", expr("norm_f(tr)"))
@@ -247,7 +244,6 @@ ORDER BY vec_id, idx""")),
     // form is O(N²·dim).
     Q("emb_isotropy_report",
       (s, d) => {
-        VectorExpressions.register(s)
         val raw = Tables.embeddings(s, d)
           .withColumn("nrm", expr("norm_f(embedding)"))
           .select(posexplode(col("embedding").cast("array<double>"))
@@ -603,7 +599,6 @@ ORDER BY vec_id, comp"""
     */
   private def centeredLit(s: org.apache.spark.sql.SparkSession,
       d: String, mu: Array[Double]): org.apache.spark.sql.DataFrame = {
-    VectorExpressions.register(s)
     // sub_scale_d with p = 1: a − 1.0·b ≡ a − b in IEEE arithmetic, and
     // the centering runs as a codegen primitive loop instead of an
     // interpreted zip_with lambda (guide §4)
@@ -825,7 +820,6 @@ ${p}v$k AS (SELECT list_transform(yv, z -> z /
       k: Int = 4, iters: Int = 2, farthest: Boolean = false)
       : Seq[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = {
     require(k >= 1 && iters >= 1, s"kmeans needs k>=1, iters>=1; got k=$k iters=$iters")
-    VectorExpressions.register(s) // sqdist_d
     val v = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("x"))
     var centroids =

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{TextHash, VectorExpressions}
+import graft.functions.TextHash
 
 /** SURVEY.md §2.8 — scalar functions (F1–F10).
   *
@@ -91,7 +91,6 @@ object Functions {
     // fixed-width vectorization
     Q("f7_feature_hash",
       (s, d) => {
-        TextHash.register(s)
         Tables.documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
           .select(col("doc_id"), (expr("tok_hash(tok)") % 16).as("bucket"))
@@ -109,7 +108,6 @@ object Functions {
     // dot / (|a|^2 + |b|^2 - dot) (tanimoto.py:138-139), native kernel
     Q("f8_tanimoto",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d).filter(col("vec_id") < 100)
         val a = emb.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
         val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))

@@ -84,7 +84,6 @@ object KnnGraphIndex {
   def bootstrap(s: SparkSession, delta: DataFrame, root: String,
       tag: String, edgesDir: String, planes: Int = VectorExpressions.SrpPlanes,
       k: Int = 3): Unit = {
-    VectorExpressions.register(s)
     require(!tag.matches("b\\d+"),
       s"bootstrap tag must not look like a batch id (got '$tag') — " +
         "update's visibility rule would scope it out of earlier batches' " +
@@ -110,10 +109,6 @@ object KnnGraphIndex {
     */
   def update(s: SparkSession, delta: DataFrame, root: String, tag: String,
       parentEdges: String, outEdges: String): Unit = {
-    VectorExpressions.register(s)
-    // micro-batch frames carry a CLONED session registry (the st18/st20
-    // UNRESOLVED_ROUTINE lesson) — register there too
-    VectorExpressions.register(delta.sparkSession)
     require(tag.matches("b\\d+"),
       s"update tag must be b<batchId> (got '$tag') — the numeric id is " +
         "what scopes fact visibility on replay")

@@ -53,15 +53,7 @@ object Registry {
   lazy val all: Seq[Q] = groups.flatten
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> { (s: SparkSession, d: String) =>
-      // the text/hash kernels (tok_hash, shingle_set, h60_f, ...) are
-      // referenced by call_function across many operators; register
-      // them once per query entry so no operator depends on another
-      // having run first (the st18/st20 UNRESOLVED_ROUTINE lesson).
-      // Idempotent map inserts — microseconds.
-      graft.functions.TextHash.register(s)
-      q.fn(s, d)
-    }).toMap
+    all.map(q => q.name -> q.fn).toMap
 
   lazy val oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap

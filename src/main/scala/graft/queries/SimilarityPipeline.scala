@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorExpressions
 
 /** The reference pipeline's flagship computation, re-hosted on the
   * `embeddings` table (SURVEY.md §7.3): for each target vector, the
@@ -31,7 +30,6 @@ object SimilarityPipeline {
     * decimals for cross-engine determinism (SURVEY.md §5).
     */
   def pairs(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val targets = emb.filter(col("label") === 0)
       .select(col("vec_id").as("target_id"), col("embedding").as("t_emb"))
@@ -131,7 +129,6 @@ WITH $sidesSqlCte, p AS (
     * [[SimilaritySearch.BandPlanes]] recall math as targets grow.
     */
   def lshPairs(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val targets = emb.filter(col("label") === 0)
       .select(col("vec_id").as("target_id"), col("embedding").as("t_emb"))

@@ -27,8 +27,7 @@ object SimilaritySearch {
     * IDENTICAL to Spark's round (RoundFastSpec pins it) without the
     * per-value BigDecimal/Double.toString allocation, which a thread
     * dump showed as the largest CPU item of the pair-scoring stages
-    * (r15, guide §1.2 per-task work). Callers must have run
-    * [[VectorExpressions.register]] — every query entry here does.
+    * (r15, guide §1.2 per-task work).
     */
   private def r6(c: Column): Column = call_function("round_f", c, lit(6))
 
@@ -185,7 +184,6 @@ object SimilaritySearch {
     */
   def kmeansCentsAvg(emb: DataFrame, iters: Int = 3): DataFrame = {
     val s = emb.sparkSession
-    VectorExpressions.register(s)
     var cents = graft.Caching.materialize(s,
       emb.filter(col("vec_id") % 100 === 10)
         .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
@@ -337,7 +335,6 @@ SELECT q_id, c_id, cos, rn FROM r WHERE rn <= 5 ORDER BY q_id, rn"""
     // Brute-force cosine top-k: exact kNN baseline
     Q("simsearch_bruteforce_topk",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
         val queries = emb.filter(col("vec_id") < 10)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -362,7 +359,6 @@ SELECT q_id, c_id, cos, rn FROM r WHERE rn <= 5 ORDER BY q_id, rn"""
     // exact cosine re-rank inside it
     Q("simsearch_lsh_bucketed",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .withColumn("bkt", bucket(col("embedding")))
         val queries = emb.filter(col("vec_id") < 10)
@@ -411,7 +407,6 @@ SELECT q_id, c_id, bkt, cos, rn FROM r WHERE rn <= 5 ORDER BY q_id, rn""")),
     // SimilaritySearchSpec bound).
     Q("simsearch_ivf_bucketed",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -453,7 +448,6 @@ SELECT q_id, c_id, bkt, cos, rn FROM r WHERE rn <= 5 ORDER BY q_id, rn""")),
     // is never reassigned or re-scanned — only the query set fans out.
     Q("simsearch_ivf_multiprobe",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -495,7 +489,6 @@ SELECT q_id, c_id, bkt, cos, rn FROM r WHERE rn <= 5 ORDER BY q_id, rn""")),
     // cell-partitioned layout turns probing into partition pruning.
     Q("simsearch_ivf_persisted",
       (s, d) => graft.Scratch.withDir(s, "annidx") { root =>
-        graft.functions.VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -525,7 +518,6 @@ SELECT q_id, c_id, bkt, cos, rn FROM r WHERE rn <= 5 ORDER BY q_id, rn""")),
     // scan equals filtering before assignment.
     Q("simsearch_filtered_ann",
       (s, d) => graft.Scratch.withDir(s, "annidxf") { root =>
-        graft.functions.VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .select(col("vec_id"), col("label"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -577,7 +569,6 @@ SELECT q_id, c_id, cos, rn FROM r WHERE rn <= 5 ORDER BY q_id, rn""")),
     // re-rank exactly.
     Q("simsearch_pq_rerank",
       (s, d) => {
-        VectorExpressions.register(s)
         val M = 4
         val dsub = 16
         val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -686,7 +677,6 @@ SELECT q_id, c_id, cos, rn FROM r WHERE rn <= 5 ORDER BY q_id, rn""")),
     // size.
     Q("simsearch_hybrid_rrf",
       (s, d) => {
-        VectorExpressions.register(s)
         // each arm cuts to top-20 via orderBy+limit FIRST (TakeOrdered
         // — distributed, k rows cross the stage) and only then ranks
         // with a window: a global row_number over the full scored
@@ -791,7 +781,6 @@ GROUP BY brute.q_id ORDER BY brute.q_id""")),
     // deterministic division.
     Q("simsearch_cell_quality",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -846,7 +835,6 @@ FROM asgc GROUP BY cell ORDER BY cell""")),
     // — one IEEE division of exact integers per row.
     Q("simsearch_probe_curve",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -1007,7 +995,6 @@ SELECT src, rk, dst, cos FROM kg ORDER BY src, rk""")),
     // count, never N².
     Q("simsearch_knn_refine",
       (s, d) => {
-        VectorExpressions.register(s)
         val g = graft.Caching.materialize(s,
           knnEdges(s, d).select("src", "dst"))
         refineRound(g, normedEmb(s, d)).orderBy("src", "rk")
@@ -1037,7 +1024,6 @@ SELECT src, rk, dst, cos FROM g2 ORDER BY src, rk""")),
     // convergence is a data property (small-world graphs: ~3-4).
     Q("simsearch_knn_converged",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = normedEmb(s, d)
         var g = graft.Caching.materialize(s, knnEdges(s, d))
         var r = 0
@@ -1100,7 +1086,6 @@ SELECT src, rk, dst, cos FROM cg$MaxRefineRounds ORDER BY src, rk"""
     // keep) and that the rebuild restores the recall floor.
     Q("simsearch_ivf_retrain_decision",
       (s, d) => {
-        VectorExpressions.register(s)
         val e = normedEmb(s, d)
         val delta = Tables.embeddings(s, d)
           .select((col("vec_id") + lit(1000000L)).as("vec_id"),
@@ -1207,7 +1192,6 @@ ORDER BY stage""")),
     // performs).
     Q("simsearch_depth_retrain_decision",
       (s, d) => {
-        VectorExpressions.register(s)
         import s.implicits._
         val base = normedEmb(s, d)
         val delta = Tables.embeddings(s, d)
@@ -1299,7 +1283,6 @@ ORDER BY stage""")),
     // no graph build, the cheapest of the three retrain monitors.
     Q("simsearch_band_retrain_decision",
       (s, d) => {
-        VectorExpressions.register(s)
         val baseE = Tables.embeddings(s, d).select("vec_id", "embedding")
         val delta = Tables.embeddings(s, d)
           .select((col("vec_id") + lit(1000000L)).as("vec_id"),
@@ -1390,7 +1373,6 @@ ORDER BY stage"""
     // the exact baseline's and measures what the cells retain.
     Q("dedup_semantic_kmeans",
       (s, d) => {
-        VectorExpressions.register(s)
         val e = normedEmb(s, d)
         val cents = kmeansCents(e)
         val w = Window.partitionBy("vec_id")
@@ -1477,7 +1459,6 @@ ORDER BY m.vec_id""")),
     // brute force and pins the visited-set bound.
     Q("simsearch_graph_route",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = normedEmb(s, d)
         val queries = emb.filter(col("vec_id") % 97 === 0)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -1544,7 +1525,6 @@ ORDER BY m.vec_id""")),
     // not hardcoded.
     Q("simsearch_beam_curve",
       (s, d) => {
-        VectorExpressions.register(s)
         import s.implicits._
         val emb = normedEmb(s, d)
         val queries = evalPanel(emb)
@@ -1659,7 +1639,6 @@ ORDER BY m.vec_id""")),
     // schedule a 100 TB deployment would pin per corpus.
     Q("simsearch_hop_curve",
       (s, d) => {
-        VectorExpressions.register(s)
         val emb = normedEmb(s, d)
         val queries = evalPanel(emb)
         val layer1 = entryLayer(emb)
@@ -1765,7 +1744,6 @@ ORDER BY m.vec_id""")),
     * SRP band join per reference (the emb_pca_topr lesson).
     */
   private[queries] def serveEdges(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     val emb = normedEmb(s, d)
     val planes = graft.functions.VectorExpressions
       .adaptiveSrpPlanes(graft.Tables.rowCount(s, d, "embeddings"))
@@ -2452,14 +2430,6 @@ WHERE hops = (SELECT kd FROM k_knee) ORDER BY qid, rk"""
     * every intermediate is referenced exactly once (callers still
     * materialize each round's INPUT).
     */
-  /** Dev-profiling hooks (graft.queries.ProfileServe) — same arguments
-    * the serve build uses; not on any query path.
-    */
-  private[queries] def devDiversify(g: DataFrame, emb: DataFrame): DataFrame =
-    diversifyRound(g, emb, ServeDegree, ServePool)
-  private[queries] def devKnee(s: SparkSession, emb: DataFrame,
-      kg: DataFrame): (Int, Seq[Long]) = kneeOver(s, emb, kg)
-
   private def diversifyRound(g: DataFrame, emb: DataFrame,
       m: Int, pool: Int): DataFrame = {
     val ge = g.select("src", "dst")
@@ -2554,7 +2524,6 @@ $out AS MATERIALIZED (SELECT src, rk, dst, cos FROM (
     */
   private[queries] def knnRounds(s: SparkSession, d: String,
       rounds: Int): Seq[DataFrame] = {
-    VectorExpressions.register(s)
     val emb = normedEmb(s, d)
     val out = Seq.newBuilder[DataFrame]
     var g = graft.Caching.materialize(s, knnEdges(s, d))
@@ -2601,7 +2570,6 @@ $out AS MATERIALIZED (SELECT src, dst, cos, rk FROM (
     */
   private[queries] def knnEdges(s: SparkSession, d: String,
       k: Int = 3): DataFrame = {
-    VectorExpressions.register(s)
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
         expr("norm_f(embedding)").as("nrm"))

@@ -35,10 +35,7 @@ object Sketches {
     // bit-equal to conv(substring(md5(s),1,15),16,10)::long (pinned by
     // Md5H60Spec) without the hex string, the substring copy, or
     // conv's per-row base-16 string parse — the top CPU item of the
-    // sketch family's hashing passes. Registered per query entry by
-    // Registry; the active-session hook covers direct (spec) callers.
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.TextHash.register)
+    // sketch family's hashing passes.
     call_function("h60_f", c.cast("string"))
   }
 

@@ -222,7 +222,6 @@ object StreamingQueries {
       Seq(AnnIndex.getClass, SimilaritySearch.getClass,
         StateStore.getClass, graft.functions.VectorExpressions.getClass),
       dir => {
-        graft.functions.VectorExpressions.register(s)
         val emb = graft.Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -849,7 +848,7 @@ ORDER BY user_id, event_type""")),
     Q("st16_streaming_quality_gate",
       (s, d) => graft.Scratch.withDir(s, "stqg") { root =>
         copyDocs(s, d, s"$root/in", "a.parquet")
-        val agg = graft.streaming.DocsStream.qualityGateTotals(s,
+        val agg = graft.streaming.DocsStream.qualityGateTotals(
           graft.streaming.DocsStream.readDocs(s, s"$root/in"))
         EventsStream.drainToMemory(agg, "st16_qg", s"$root/ck")
         s.table("st16_qg")
@@ -887,7 +886,6 @@ FROM j GROUP BY source ORDER BY source""")),
     // serving still prunes cells whatever the ingest nesting.
     Q("st17_streaming_ann_append",
       (s, d) => graft.Scratch.withDir(s, "stann") { root =>
-        graft.functions.VectorExpressions.register(s)
         val emb = graft.Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             expr("norm_f(embedding)").as("nrm"))
@@ -1068,7 +1066,6 @@ FROM sigt ORDER BY doc_id""")),
     // for a grown corpus is the retrain decision's loop.
     Q("st21_streaming_knn_graph",
       (s, d) => graft.Scratch.withDir(s, "stknng") { root =>
-        graft.functions.VectorExpressions.register(s)
         val emb = graft.Tables.embeddings(s, d)
           .select("vec_id", "embedding")
         // the family pins at bootstrap — ADAPTIVELY for the corpus this

@@ -192,7 +192,6 @@ FROM documents ORDER BY doc_id""")),
     // 3-token shingles (winnowing-style content signature)
     Q("text_fingerprint",
       (s, d) => {
-        TextHash.register(s)
         Tables.documents(s, d)
           .withColumn("text_hash", expr("tok_hash(text)"))
           .withColumn("shingle_min_hash", expr("shingle_min(text)"))
@@ -217,7 +216,6 @@ FROM t ORDER BY doc_id""")),
     // consistent with what near-dup dedup sees.
     Q("text_repetition_ratio",
       (s, d) => {
-        TextHash.register(s)
         val toks = split(col("text"), " ")
         Tables.documents(s, d)
           .withColumn("n_trigrams",
@@ -793,8 +791,7 @@ lm AS (
     * with a `text` column — the SINGLE source of the model arithmetic,
     * shared by [[classifierScored]] (batch) and
     * [[graft.streaming.DocsStream.qualityGateTotals]] (streaming), so
-    * a constant retune cannot leave one copy stale. Callers must have
-    * TextHash.register'd the session.
+    * a constant retune cannot leave one copy stale.
     */
   private[graft] def withClassifierScore(df: DataFrame): DataFrame =
     df.withColumn("n_tokens",
@@ -813,7 +810,6 @@ lm AS (
     */
   private[graft] def classifierScored(s: SparkSession, d: String)
       : DataFrame = {
-    TextHash.register(s)
     withClassifierScore(Tables.documents(s, d))
       .select(col("doc_id"), col("n_tokens"), col("wsum"), col("score"))
   }

@@ -58,16 +58,7 @@ object TextIndex {
     * One shuffle (the per-(term,doc) count); tf > 0 rows only, which is
     * what lets query-time df = postings-row count per term.
     */
-  private def postings(s: SparkSession, docs: DataFrame): DataFrame = {
-    TextHash.register(s)
-    // inside foreachBatch `docs` belongs to the micro-batch's CLONED
-    // session whose function registry was copied at stream start —
-    // register there too, or tok_hash resolves only when some earlier
-    // call happened to register it before the clone was cut (observed:
-    // st18 failing UNRESOLVED_ROUTINE once the bootstrap append moved
-    // to the warm cache and no longer registered on the main session
-    // first — the same class of bug as st20's shingle_set, r14)
-    TextHash.register(docs.sparkSession)
+  private def postings(docs: DataFrame): DataFrame = {
     docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("dl", size(col("toks")).cast("long"))
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
@@ -77,7 +68,7 @@ object TextIndex {
 
   /** Build the index from scratch over `docs` (doc_id, text). */
   def build(s: SparkSession, docs: DataFrame, stateDir: String): Unit = {
-    postings(s, docs).write.mode("overwrite")
+    postings(docs).write.mode("overwrite")
       .partitionBy("bucket").parquet(s"$stateDir/post")
     docs.select(col("doc_id"), size(split(col("text"), " ")).cast("long")
         .as("dl"))
@@ -90,7 +81,7 @@ object TextIndex {
     * existing posting file is rewritten — O(delta) I/O.
     */
   def append(s: SparkSession, newDocs: DataFrame, stateDir: String): Unit = {
-    postings(s, newDocs).write.mode("append")
+    postings(newDocs).write.mode("append")
       .partitionBy("bucket").parquet(s"$stateDir/post")
     val old = s.read.parquet(s"$stateDir/stats").head()
     val delta = newDocs
@@ -117,7 +108,7 @@ object TextIndex {
     */
   def appendBatch(s: SparkSession, newDocs: DataFrame, stateDir: String,
       tag: String): Unit = {
-    StateStore.appendTagged(s, postings(s, newDocs),
+    StateStore.appendTagged(s, postings(newDocs),
       s"$stateDir/post", tag, Seq("bucket"))
     StateStore.appendTagged(s,
       newDocs.select(size(split(col("text"), " ")).cast("long").as("dl"))

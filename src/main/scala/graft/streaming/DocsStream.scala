@@ -62,7 +62,6 @@ object DocsStream extends Serializable {
     */
   def nearDupPairs(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    graft.functions.TextHash.register(spark)
     val P = graft.functions.TextHash.P
     // shingle + hash ONCE per doc (r15): the previous per-slot
     // expression re-ran shingle_set AND tok_hash once per signature
@@ -145,8 +144,7 @@ object DocsStream extends Serializable {
     * are arrival-order- and slicing-independent; the only state is
     * |sources| rows.
     */
-  def qualityGateTotals(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.TextHash.register(spark)
+  def qualityGateTotals(docs: DataFrame): DataFrame = {
     // the scoring columns come from the ONE shared model builder —
     // stream and batch cannot diverge by construction
     graft.queries.TextAnalysis.withClassifierScore(docs)

@@ -2,16 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole suite (JVM-forked by sbt). */
+/** One shared local session for the whole suite (JVM-forked by sbt),
+  * built by the shipped factory so specs run its configuration,
+  * analyzer rules and function catalog.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.build("local[4]", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

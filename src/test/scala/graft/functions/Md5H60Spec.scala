@@ -31,7 +31,6 @@ class Md5H60Spec extends AnyFunSuite {
     spark.conf.set("spark.sql.codegen.factoryMode", mode)
     try {
       import spark.implicits._
-      TextHash.register(spark)
       val df = inputs.toDF("x")
       val rows = df.select(
         conv(substring(md5(col("x").cast("string")), 1, 15), 16, 10)

@@ -40,7 +40,6 @@ class RoundFastSpec extends AnyFunSuite {
 
   private def fastRound(xs: Seq[Double], s: Int): Seq[Double] = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     xs.toDF("x").selectExpr(s"round_f(x, $s) AS r")
       .collect().map(_.getDouble(0)).toSeq
   }

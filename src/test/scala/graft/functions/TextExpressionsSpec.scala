@@ -24,7 +24,6 @@ class TextExpressionsSpec extends AnyFunSuite {
     "trailing space ", "  double  spaces", "tab\tand\nnewline")
 
   private def run(): Seq[(String, Long, Seq[String], Long, Long)] = {
-    TextHash.register(spark)
     fixtures.toDF("t")
       .select(col("t"), expr("tok_hash(t)"), expr("shingle_set(t)"),
         expr("shingle_min(t)"), expr("simhash32(t)"))
@@ -53,7 +52,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   }
 
   test("null in, null out — matching the oracle twins' CASE semantics") {
-    TextHash.register(spark)
     val r = Seq(Option.empty[String]).toDF("t")
       .select(expr("tok_hash(t)"), expr("shingle_set(t)")).head()
     assert(r.isNullAt(0) && r.isNullAt(1))

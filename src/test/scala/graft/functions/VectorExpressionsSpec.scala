@@ -19,21 +19,18 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("dot_f computes the double-accumulated dot product") {
-    VectorExpressions.register(spark)
     val out = df(Seq((Array(1f, 2f, 3f), Array(4f, 5f, 6f))))
       .select(expr("dot_f(a, b)")).head.getDouble(0)
     assert(out == 1.0 * 4 + 2.0 * 5 + 3.0 * 6)
   }
 
   test("dot_f truncates to the shorter array; empty arrays give 0") {
-    VectorExpressions.register(spark)
     val out = df(Seq((Array(1f, 2f, 3f), Array(10f)), (Array[Float](), Array[Float]())))
       .select(expr("dot_f(a, b)")).collect().map(_.getDouble(0)).toSeq
     assert(out == Seq(10.0, 0.0))
   }
 
   test("dot_f / norm_f are null-safe") {
-    VectorExpressions.register(spark)
     val schema = StructType(Seq(StructField("a", ArrayType(FloatType))))
     val d = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(null))), schema)
@@ -42,7 +39,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("norm_f(v) equals sqrt(dot_f(v, v)) and matches hand computation") {
-    VectorExpressions.register(spark)
     val r = df(Seq((Array(3f, 4f), Array(3f, 4f))))
       .select(expr("norm_f(a)"), expr("dot_f(a, b)")).head
     assert(r.getDouble(0) == 5.0)
@@ -50,7 +46,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    VectorExpressions.register(spark)
     val rows = Seq(
       (Array(0.1f, -0.5f, 2.25f, 7.5f), Array(1.5f, 0.25f, -3.5f, 0f)),
       (Array.tabulate(64)(i => (i * 0.37f) - 8f), Array.tabulate(64)(i => 1f / (i + 1))))
@@ -70,7 +65,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("srp_buckets equals the per-band HOF formulation on real " +
     "embeddings, in both codegen and interpreted paths") {
-    VectorExpressions.register(spark)
     import org.apache.spark.sql.functions.{col, expr}
     val emb = graft.Tables.embeddings(spark, graft.TestSpark.Sf0001)
       .select(col("vec_id"), col("embedding"))

@@ -21,7 +21,6 @@ class AnnIndexCompactSpec extends AnyFunSuite {
   }
 
   test("compact squashes fragmented cells only and preserves query results") {
-    graft.functions.VectorExpressions.register(spark)
     val root = graft.Scratch.dir("anncompact")
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf001)

@@ -22,7 +22,6 @@ class AnnIndexPurgeSpec extends AnyFunSuite {
   }
 
   test("purge rewrites touched cells only and equals a build over the survivors") {
-    graft.functions.VectorExpressions.register(spark)
     val r1 = graft.Scratch.dir("annpurge1")
     val r2 = graft.Scratch.dir("annpurge2")
     try {

@@ -50,7 +50,6 @@ class CurationSpec extends AnyFunSuite {
     assert(out.forall(_.getLong(3) <= 3000))
     // maximality: within each shard the packed set is a PREFIX of the
     // hash order — the first excluded doc would push the sum past budget
-    TextHash.register(spark)
     val all = Tables.documents(spark, TestSpark.Sf0001)
       .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
       .withColumn("hkey", expr(

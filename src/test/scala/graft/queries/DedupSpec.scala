@@ -74,7 +74,6 @@ class DedupSpec extends AnyFunSuite {
   test("SimHash banded blocking == all-pairs at Hamming <= 6 (pigeonhole)") {
     import org.apache.spark.sql.functions._
     val s = TestSpark.spark
-    TextHash.register(s)
     val docs = graft.Tables.documents(s, TestSpark.Sf0001)
       .select(col("doc_id"), col("source"), expr("simhash32(text)").as("sh"))
     val brute = docs.select(col("doc_id").as("i"), col("source"), col("sh").as("sh_a"))
@@ -222,7 +221,6 @@ class DedupSpec extends AnyFunSuite {
     val s = TestSpark.spark
     import org.apache.spark.sql.functions._
     import s.implicits._
-    TextHash.register(s)
     // a short doc embedded verbatim as the prefix of a much longer one:
     // every short shingle is in the long set, but the union is dominated
     // by the long side — containment 1.0, Jaccard well under 0.5

@@ -49,7 +49,6 @@ class SimilaritySearchSpec extends AnyFunSuite {
 
   test("persisted IVF index: cell-partitioned layout, query equals multiprobe, scan prunes") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_annidx_spec").toString
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf001)
@@ -81,7 +80,6 @@ class SimilaritySearchSpec extends AnyFunSuite {
 
   test("append folds new vectors in without retraining and matches a full build") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val r1 = java.nio.file.Files.createTempDirectory("graft_annidx_app1").toString
     val r2 = java.nio.file.Files.createTempDirectory("graft_annidx_app2").toString
     try {
@@ -110,7 +108,6 @@ class SimilaritySearchSpec extends AnyFunSuite {
 
   test("filtered ANN on the persisted index: label predicate AND cell probe both push into the vec/ scan") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_annidx_filt").toString
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf001)
@@ -139,7 +136,6 @@ class SimilaritySearchSpec extends AnyFunSuite {
 
   test("production avg-quantizer (multi-iteration Lloyd) holds the oracle quantizer's recall floors") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_annidx_avgq").toString
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf001)
@@ -179,7 +175,6 @@ class SimilaritySearchSpec extends AnyFunSuite {
 
   test("build enforces the maxCells cap so purge/compact driver lists stay bounded") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val root = graft.Scratch.dir("annidx_cap")
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf001)
@@ -216,7 +211,6 @@ class SimilaritySearchSpec extends AnyFunSuite {
   test("retrain decision: drift flips to rebuild, undrifted append keeps, " +
     "rebuild restores the recall floor") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     // the registered query's drifted scenario must flag the rebuild,
     // and the retrain must actually repair coherence
     val rows = Registry.queries("simsearch_ivf_retrain_decision")(

@@ -429,7 +429,7 @@ class StreamingSpec extends AnyFunSuite {
     def gate(in: Path, tag: String, ck: Path,
         maxFiles: Option[Int]): Set[(String, Long, Long, Long)] = {
       EventsStream.drainToMemory(
-        DocsStream.qualityGateTotals(spark,
+        DocsStream.qualityGateTotals(
           DocsStream.readDocs(spark, in.toString, maxFiles)),
         s"t16_$tag", ck.toString)
       spark.table(s"t16_$tag").collect()
@@ -522,7 +522,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("st17 appendBatch: same-tag replay replaces its own partitions and " +
     "leaves other tags' files byte-identical (mid-batch crash redelivery)") {
-    graft.functions.VectorExpressions.register(spark)
     val root = graft.Scratch.dir("stann_replay")
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf001)
@@ -603,7 +602,6 @@ class StreamingSpec extends AnyFunSuite {
   test("st21 KnnGraphIndex: crash-redelivered update recomputes from the " +
     "same parent (facts and edges row-stable), and the chained head " +
     "equals the from-scratch graph") {
-    graft.functions.VectorExpressions.register(spark)
     val root = graft.Scratch.dir("stknng_replay")
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf0001)
@@ -655,7 +653,6 @@ class StreamingSpec extends AnyFunSuite {
     "dropped (first arrival wins) — facts stay single-rowed, every " +
     "neighbor list keeps contiguous ranks, and the head equals the " +
     "from-scratch graph over the distinct corpus") {
-    graft.functions.VectorExpressions.register(spark)
     val root = graft.Scratch.dir("stknng_xbatch")
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf0001)
@@ -709,7 +706,6 @@ class StreamingSpec extends AnyFunSuite {
     "away — head rows identical, a post-horizon update chains on the " +
     "compacted head and equals the from-scratch graph, its replay is " +
     "unchanged, and pre-horizon replays are rejected") {
-    graft.functions.VectorExpressions.register(spark)
     val root = graft.Scratch.dir("stknng_compact")
     try {
       val emb = graft.Tables.embeddings(spark, TestSpark.Sf0001)
